@@ -72,14 +72,13 @@ object SparkEntry {
     * 100-TB stream keeps its parallelism — the cap means this can only
     * LOWER the count when the input is provably small. Partition count
     * never changes the drained row SET (state ops are per-key; results are
-    * exact integer/decimal), only where keys live. */
-  private def stateShufflePartitions(s: SparkSession, inputDirs: Seq[String]): Int = {
+    * exact integer/decimal), only where keys live. Input bytes come from
+    * the XML split planner's Hadoop `FileSystem` count, so `file:` URIs and
+    * HDFS/S3 paths measure their real size. */
+  private[graft] def stateShufflePartitions(s: SparkSession, inputDirs: Seq[String]): Int = {
     val cap = s.sessionState.conf.numShufflePartitions
-    var bytes = 0L
-    def walk(f: java.io.File): Unit =
-      if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty).foreach(walk)
-      else bytes += f.length
-    inputDirs.foreach(p => walk(new java.io.File(p)))
+    val bytes = graft.xml.XmlFile
+      .inputBytes(s.sparkContext.hadoopConfiguration, inputDirs.mkString(",")).getOrElse(0L)
     math.max(1, math.min(cap.toLong, bytes / (64L << 20) + 1)).toInt
   }
 

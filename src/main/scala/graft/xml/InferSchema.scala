@@ -32,18 +32,26 @@ import org.apache.spark.sql.types._
  */
 private[graft] object InferSchema {
 
-  def infer(xml: RDD[String], options: XmlOptions): StructType = {
+  /** Infers over records of unknown size, spreading them to every core. */
+  def infer(xml: RDD[String], options: XmlOptions): StructType =
+    infer(xml, options, xml.sparkContext.defaultParallelism)
+
+  /**
+   * Infers over `xml`, spreading its records to `parallelism` partitions
+   * when it has fewer. Per-record inference is CPU-bound, so an
+   * under-partitioned input (a gzip or UTF-16 file that cannot split, a
+   * derived dataset inheriting a small scan) would run nearly serial; the
+   * lattice merge is commutative and canonicalized, so a round-robin spread
+   * cannot change the result. File scans pass the parallelism their bytes
+   * warrant ([[XmlFile.plan]]), so a file below one split's worth infers in
+   * one stage instead of paying a shuffle for cores it cannot use.
+   */
+  def infer(xml: RDD[String], options: XmlOptions, parallelism: Int): StructType = {
     val sampled =
       if (options.samplingRatio < 1.0) xml.sample(withReplacement = false, options.samplingRatio, 1)
       else xml
-    // Per-record inference is CPU-bound; an under-partitioned input (a
-    // 1-split file, a derived dataset inheriting a small scan) would run it
-    // nearly serial. The lattice merge is commutative and canonicalized, so
-    // a round-robin spread cannot change the result. At scale inputs carry
-    // more partitions than cores and this is a no-op.
-    val target = sampled.sparkContext.defaultParallelism
     val spread =
-      if (sampled.getNumPartitions < target) sampled.repartition(target) else sampled
+      if (sampled.getNumPartitions < parallelism) sampled.repartition(parallelism) else sampled
     val zero: DataType = NullType
     val merged = spread
       .mapPartitions { iter =>
@@ -90,6 +98,13 @@ private[graft] object InferSchema {
       case st: StructType => st
       case _ => StructType(Nil)
     }
+  }
+
+  /** The schema a source reports: inferred, or its all-strings shape when
+   *  `inferSchema=false`. */
+  def resolve(xml: RDD[String], options: XmlOptions, parallelism: Int): StructType = {
+    val inferred = infer(xml, options, parallelism)
+    if (options.inferSchema) inferred else stringOnly(inferred).asInstanceOf[StructType]
   }
 
   def inferRecord(record: String, options: XmlOptions): DataType = {
@@ -248,7 +263,10 @@ private[graft] object InferSchema {
   }
 }
 
-/** Shared thread-local StAX input factories (not thread-safe per spec). */
+/** Thread-local StAX input factories (not thread-safe per spec), shared by
+ *  inference and the parser. `XMLInputFactory.newInstance()` resolves to the
+ *  Woodstox shaded into hadoop-client-runtime, which has no reader-recycling
+ *  property: every record gets a fresh reader. */
 private[graft] object StaxFactories {
   import javax.xml.stream.XMLInputFactory
   private val tl = new ThreadLocal[XMLInputFactory] {
@@ -258,12 +276,8 @@ private[graft] object StaxFactories {
       f.setProperty(XMLInputFactory.IS_COALESCING, true)
       f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
       f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-      // SJSXP reader recycling (see StaxXmlParser): per-thread sequential
-      // parses, so instance reuse is safe; other impls reject and allocate.
-      try f.setProperty("reuse-instance", java.lang.Boolean.TRUE)
-      catch { case _: IllegalArgumentException => }
       f
     }
   }
-  def get: javax.xml.stream.XMLInputFactory = tl.get()
+  def get: XMLInputFactory = tl.get()
 }

@@ -1,6 +1,6 @@
 package graft.xml
 
-import java.time.{LocalDate, ZoneId, ZoneOffset}
+import java.time.LocalDate
 import java.time.format.DateTimeFormatter
 
 import org.apache.spark.sql.catalyst.InternalRow
@@ -38,8 +38,7 @@ private[graft] final class StaxXmlGenerator(
   // measurable cost on timestamp-heavy corpora.
   private val tsFormatter: DateTimeFormatter = options.timestampFormat match {
     case Some(fmt) =>
-      val zone = options.timezone.map(ZoneId.of).getOrElse(ZoneOffset.UTC)
-      DateTimeFormatter.ofPattern(fmt).withZone(zone)
+      DateTimeFormatter.ofPattern(fmt).withZone(options.zoneId)
     case None => DateTimeFormatter.ISO_INSTANT
   }
   private val dateFormatter: DateTimeFormatter = options.dateFormat match {

@@ -2,7 +2,7 @@ package graft.xml
 
 import java.io.StringReader
 
-import javax.xml.stream.{XMLInputFactory, XMLStreamConstants, XMLStreamReader}
+import javax.xml.stream.{XMLStreamConstants, XMLStreamReader}
 
 import scala.collection.mutable
 import scala.util.control.NonFatal
@@ -35,25 +35,6 @@ import org.apache.spark.unsafe.types.UTF8String
  */
 private[graft] object StaxXmlParser {
   import XMLStreamConstants._
-
-  private val factories = new ThreadLocal[XMLInputFactory] {
-    override def initialValue(): XMLInputFactory = {
-      val f = XMLInputFactory.newInstance()
-      f.setProperty(XMLInputFactory.IS_NAMESPACE_AWARE, false)
-      f.setProperty(XMLInputFactory.IS_COALESCING, true)
-      f.setProperty(XMLInputFactory.SUPPORT_DTD, false)
-      f.setProperty(XMLInputFactory.IS_SUPPORTING_EXTERNAL_ENTITIES, false)
-      // The JDK's SJSXP recycles its reader instance across
-      // createXMLStreamReader calls when asked, skipping ~10 allocations +
-      // buffer setup per record. Safe here: the factory is thread-local and
-      // every parse completes before the next begins on a thread (parses
-      // never nest — expression arguments are evaluated strictly). Other
-      // StAX impls reject the property; that's fine, they just allocate.
-      try f.setProperty("reuse-instance", java.lang.Boolean.TRUE)
-      catch { case _: IllegalArgumentException => }
-      f
-    }
-  }
 
   /**
    * Distributed entry point: one task parses its partition's records.
@@ -132,7 +113,7 @@ private[graft] object StaxXmlParser {
   def parseRecord(record: String, schema: StructType, options: XmlOptions): Option[InternalRow] = {
     val status = new Status
     try {
-      val reader = factories.get().createXMLStreamReader(new StringReader(record))
+      val reader = StaxFactories.get.createXMLStreamReader(new StringReader(record))
       try {
         while (reader.getEventType != START_ELEMENT && reader.hasNext) reader.next()
         if (reader.getEventType != START_ELEMENT) {

@@ -124,7 +124,7 @@ private[graft] object TypeCast {
 
   private[xml] def parseXmlTimestamp(value: String, options: XmlOptions): Timestamp = {
     def fromInstant(i: Instant): Timestamp = Timestamp.from(i)
-    val zone = options.timezone.map(ZoneId.of).getOrElse(ZoneOffset.UTC)
+    val zone = options.zoneId
 
     val n = builtInTimestampFormats.length
     val start = lastHitTimestampFormat.get()

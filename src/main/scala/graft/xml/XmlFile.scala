@@ -2,6 +2,7 @@ package graft.xml
 
 import java.nio.charset.Charset
 
+import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.io.{LongWritable, NullWritable, Text}
 import org.apache.hadoop.io.compress.CompressionCodec
 import org.apache.spark.SparkContext
@@ -22,56 +23,77 @@ import org.apache.spark.sql.DataFrame
 private[graft] object XmlFile {
 
   /**
-   * Split max-size per Spark's FilePartition.maxSplitBytes policy: pack the
-   * input into at least defaultParallelism splits, bounded by [4 MB
-   * open-cost, 128 MB]. FileInputFormat otherwise splits at the filesystem
-   * block size (32 MB on local disks), which leaves most cores idle on
-   * inputs in the 100 MB range. Involves a driver-side listing — compute
-   * once per relation and pass the result to [[read]] (XmlRelation caches
-   * it across inference + every buildScan); None when the listing fails or
-   * an explicit user setting should win.
+   * Floor on split bytes. Spark's 4 MB file open cost is sized for parquet
+   * scans at ~500 MB/s per core, about 8 ms of work per split; XML parses
+   * at ~60 MB/s per core, so the same 8 ms is about 512 KB. A smaller split
+   * costs more to launch than to parse.
    */
-  def splitMaxSizeFor(sc: SparkContext, path: String): Option[Long] = {
-    if (sc.hadoopConfiguration.get("mapreduce.input.fileinputformat.split.maxsize") != null) {
-      return None
-    }
-    totalInputBytes(sc.hadoopConfiguration, path).map { total =>
-      val target = math.max(1, sc.defaultParallelism)
-      math.min(128L << 20, math.max(4L << 20, total / target))
+  private val MinSplitBytes: Long = 512L << 10
+  /** Ceiling on split bytes (Spark's `maxPartitionBytes` default). */
+  private val MaxSplitBytes: Long = 128L << 20
+  private val SplitMaxSizeKey = "mapreduce.input.fileinputformat.split.maxsize"
+
+  /** Plans the splits of the files `path` names from one driver-side
+   *  listing. Compute once per read and pass it to [[read]] (XmlRelation
+   *  keeps one across inference and every buildScan). */
+  def plan(sc: SparkContext, path: String, options: XmlOptions): SplitPlan =
+    plan(sc, inputBytes(sc.hadoopConfiguration, path), options)
+
+  /**
+   * The split policy, from the input's total bytes (None when the listing
+   * failed). Split bytes = total ÷ defaultParallelism, clamped to
+   * [[MinSplitBytes]]..[[MaxSplitBytes]], so an input of at least one floor
+   * per core fills every core while a tiny one stays one task. An explicit
+   * `splitMaxBytes` option wins, then a global Hadoop split max size, then
+   * the policy. The warranted parallelism is ⌊total ÷ split bytes⌋ within
+   * [1, cores]: rounding down keeps it at or below the splits Hadoop cuts
+   * (a tail of up to 10% joins the last split), so a scan that got its
+   * planned splits is never spread again.
+   */
+  def plan(sc: SparkContext, totalBytes: Option[Long], options: XmlOptions): SplitPlan = {
+    val cores = math.max(1, sc.defaultParallelism)
+    val conf = sc.hadoopConfiguration
+    val global =
+      if (conf.get(SplitMaxSizeKey) == null) None else Some(conf.getLong(SplitMaxSizeKey, MaxSplitBytes))
+    totalBytes match {
+      case None => SplitPlan(options.splitMaxBytes, cores)
+      case Some(total) =>
+        val policy = math.min(MaxSplitBytes, math.max(MinSplitBytes, total / cores))
+        val splitBytes = math.max(1L, options.splitMaxBytes.orElse(global).getOrElse(policy))
+        // A global setting is already in force; only an option or the policy is set.
+        val setting = if (options.splitMaxBytes.isEmpty && global.isDefined) None else Some(splitBytes)
+        SplitPlan(setting, math.min(cores.toLong, math.max(1L, total / splitBytes)).toInt)
     }
   }
 
-  /** Raw record strings for `path`, split-parallel; computes split sizing
-   *  here (explicit `splitMaxBytes` option, else the packing policy). */
-  def read(sc: SparkContext, path: String, options: XmlOptions): RDD[String] =
-    read(sc, path, options, options.splitMaxBytes.orElse(splitMaxSizeFor(sc, path)))
+  /** The policy's split size for `path`; None under a global Hadoop split
+   *  max size, which then stays in force. */
+  def splitMaxSizeFor(sc: SparkContext, path: String): Option[Long] =
+    plan(sc, path, XmlOptions()).maxSplitBytes
 
-  /** Raw record strings for `path`, split-parallel, with sizing precomputed
-   *  by the caller (XmlRelation computes once and reuses across inference +
-   *  every buildScan). */
-  def read(
-      sc: SparkContext,
-      path: String,
-      options: XmlOptions,
-      splitMaxSize: Option[Long]): RDD[String] = {
-    val conf = new org.apache.hadoop.conf.Configuration(sc.hadoopConfiguration)
+  /** The Hadoop configuration of one planned read: a private copy of the
+   *  context's, with the row tag, the charset and the planned split size. */
+  def inputConf(sc: SparkContext, options: XmlOptions, plan: SplitPlan): Configuration = {
+    val conf = new Configuration(sc.hadoopConfiguration)
     conf.set(XmlInputFormat.ROW_TAG_KEY, options.rowTag)
     conf.set(XmlInputFormat.ENCODING_KEY, options.charset)
-    splitMaxSize.foreach { maxSplit =>
-      // An explicit per-read option wins over the global Hadoop conf (this
-      // conf is a private copy); policy-computed sizing only fills a gap.
-      if (options.splitMaxBytes.isDefined ||
-          conf.get("mapreduce.input.fileinputformat.split.maxsize") == null) {
-        conf.setLong("mapreduce.input.fileinputformat.split.maxsize", maxSplit)
-      }
-    }
+    plan.maxSplitBytes.foreach(conf.setLong(SplitMaxSizeKey, _))
+    conf
+  }
+
+  /** Raw record strings for `path`, split-parallel, planned here. */
+  def read(sc: SparkContext, path: String, options: XmlOptions): RDD[String] =
+    read(sc, path, options, plan(sc, path, options))
+
+  /** Raw record strings for `path`, split-parallel, as `plan` sizes them. */
+  def read(sc: SparkContext, path: String, options: XmlOptions, plan: SplitPlan): RDD[String] = {
     val charsetName = options.charset
     sc.newAPIHadoopFile(
         path,
         classOf[XmlInputFormat],
         classOf[LongWritable],
         classOf[Text],
-        conf)
+        inputConf(sc, options, plan))
       .mapPartitions { iter =>
         // Non-ASCII-compatible input was decoded to UTF-8 by the record
         // reader (TranscodingInputStream), so record bytes are then UTF-8
@@ -84,11 +106,9 @@ private[graft] object XmlFile {
       }
   }
 
-  /** Total byte size of the files `path` names (comma-separated, globs ok);
-   *  None if listing fails — sizing then falls back to Hadoop defaults. */
-  private def totalInputBytes(
-      conf: org.apache.hadoop.conf.Configuration,
-      path: String): Option[Long] = {
+  /** Total byte size of the files `path` names (comma-separated, globs ok,
+   *  any Hadoop filesystem); None if listing fails. */
+  def inputBytes(conf: Configuration, path: String): Option[Long] = {
     try {
       var total = 0L
       path.split(",").foreach { p =>
@@ -197,3 +217,8 @@ private[graft] object XmlFile {
       .asInstanceOf[Class[_ <: CompressionCodec]]
   }
 }
+
+/** How one read splits its input: the split max size it sets (None leaves
+ *  a global setting or Hadoop's block sizing in force), and how many tasks
+ *  its bytes warrant, at most the cores. */
+private[graft] final case class SplitPlan(maxSplitBytes: Option[Long], parallelism: Int)

@@ -36,7 +36,10 @@ import org.apache.hadoop.mapreduce.lib.input.{FileInputFormat, FileSplit}
  * first `<rowTag` it sees as a record start and emits a phantom record.
  * Within a split these constructs are handled exactly (XmlScannerFuzzSuite);
  * across boundaries exactness would require scanning from file start, which
- * forfeits the parallel-scan contract.
+ * forfeits the parallel-scan contract. With the 512 KB split floor
+ * ([[XmlFile.plan]]) any file above ~563 KB (the floor plus Hadoop's 10%
+ * split slop) can split by default, so such files can show phantom records,
+ * not only files above ~4.4 MB as under Spark's 4 MB open-cost floor.
  */
 class XmlInputFormat extends FileInputFormat[LongWritable, Text] {
 

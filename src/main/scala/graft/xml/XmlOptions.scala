@@ -1,6 +1,7 @@
 package graft.xml
 
 import java.nio.charset.StandardCharsets
+import java.time.{ZoneId, ZoneOffset}
 
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
 
@@ -49,6 +50,9 @@ class XmlOptions(@transient private val raw: Map[String, String]) extends Serial
   val timestampFormat: Option[String] = get("timestampFormat")
   val dateFormat: Option[String] = get("dateFormat")
   val timezone: Option[String] = get("timezone")
+  /** `timezone` resolved once per options instance (a zone lookup per
+   *  parsed timestamp showed in executor profiles); UTC when unset. */
+  lazy val zoneId: ZoneId = timezone.map(ZoneId.of).getOrElse(ZoneOffset.UTC)
   /**
    * Raw-record substring pre-filtering for pushed-down string predicates
    * (skip the whole StAX parse when a record cannot match). Sound for any

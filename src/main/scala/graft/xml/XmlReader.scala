@@ -63,11 +63,7 @@ class XmlReader extends Serializable {
     val options = XmlOptions(params.toMap)
     val resolved =
       if (schema != null) schema
-      else {
-        val inferred = InferSchema.infer(rdd, options)
-        if (options.inferSchema) inferred
-        else InferSchema.stringOnly(inferred).asInstanceOf[StructType]
-      }
+      else InferSchema.resolve(rdd, options, spark.sparkContext.defaultParallelism)
     org.apache.spark.sql.graft.Bridge.internalCreateDataFrame(
       spark, StaxXmlParser.parse(rdd, resolved, options), resolved)
   }

@@ -93,20 +93,15 @@ case class XmlRelation(
   private val options = XmlOptions(parameters)
 
   // One driver-side listing per relation, shared by inference and every
-  // buildScan (each would otherwise re-list the input to size splits). An
-  // explicit splitMaxBytes option skips the listing entirely.
-  @transient private lazy val splitMaxSize: Option[Long] =
-    options.splitMaxBytes.orElse(
-      XmlFile.splitMaxSizeFor(sqlContext.sparkContext, location))
+  // buildScan (each would otherwise re-list the input to size splits).
+  @transient private lazy val splitPlan: SplitPlan =
+    XmlFile.plan(sqlContext.sparkContext, location, options)
 
   private def baseRDD(): RDD[String] =
-    XmlFile.read(sqlContext.sparkContext, location, options, splitMaxSize)
+    XmlFile.read(sqlContext.sparkContext, location, options, splitPlan)
 
-  override val schema: StructType = userSchema.getOrElse {
-    val inferred = InferSchema.infer(baseRDD(), options)
-    if (options.inferSchema) inferred
-    else InferSchema.stringOnly(inferred).asInstanceOf[StructType]
-  }
+  override val schema: StructType = userSchema.getOrElse(
+    InferSchema.resolve(baseRDD(), options, splitPlan.parallelism))
 
   // The parser emits InternalRow directly; telling Spark so skips the
   // per-row external->internal conversion above the scan.
@@ -194,15 +189,15 @@ class DefaultSource
       sqlContext: SQLContext,
       parameters: Map[String, String]): StructType = {
     val options = XmlOptions(parameters)
-    val raw = XmlFile.read(sqlContext.sparkContext, pathFor(parameters), options)
+    val sc = sqlContext.sparkContext
+    val plan = XmlFile.plan(sc, pathFor(parameters), options)
+    val raw = XmlFile.read(sc, pathFor(parameters), options, plan)
     if (raw.isEmpty()) {
       throw new IllegalArgumentException(
         "Cannot infer a schema for an XML stream over an empty directory; " +
           "provide .schema(...) or seed the directory first")
     }
-    val inferred = InferSchema.infer(raw, options)
-    if (options.inferSchema) inferred
-    else InferSchema.stringOnly(inferred).asInstanceOf[StructType]
+    InferSchema.resolve(raw, options, plan.parallelism)
   }
 
   override def sourceSchema(

@@ -308,19 +308,12 @@ private[xml] class XmlStreamSource(
       Bridge.internalCreateStreamingDataFrame(
         spark, spark.sparkContext.emptyRDD, schema)
     } else {
-      // Split sizing from the lengths captured at discovery — no second
+      // Split plan from the lengths captured at discovery — no second
       // driver-side listing per trigger (on an object store that would be
       // one round-trip per file per micro-batch).
-      val total = entries.map(_.len).sum
-      val sizing = options.splitMaxBytes.orElse {
-        if (total <= 0) None
-        else {
-          val target = math.max(1, sqlContext.sparkContext.defaultParallelism)
-          Some(math.min(128L << 20, math.max(4L << 20, total / target)))
-        }
-      }
-      val raw = XmlFile.read(
-        sqlContext.sparkContext, entries.map(_.path).mkString(","), options, sizing)
+      val sc = sqlContext.sparkContext
+      val plan = XmlFile.plan(sc, Some(entries.map(_.len).sum), options)
+      val raw = XmlFile.read(sc, entries.map(_.path).mkString(","), options, plan)
       Bridge.internalCreateStreamingDataFrame(
         spark, StaxXmlParser.parse(raw, schema, options), schema)
     }

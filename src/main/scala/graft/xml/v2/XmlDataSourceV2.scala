@@ -83,10 +83,9 @@ private[v2] object XmlTable {
    *  all-strings when `inferSchema=false`). */
   def inferSchema(spark: SparkSession, parameters: Map[String, String]): StructType = {
     val options = XmlOptions(parameters)
-    val raw = XmlFile.read(spark.sparkContext, pathFor(parameters), options)
-    val inferred = InferSchema.infer(raw, options)
-    if (options.inferSchema) inferred
-    else InferSchema.stringOnly(inferred).asInstanceOf[StructType]
+    val plan = XmlFile.plan(spark.sparkContext, pathFor(parameters), options)
+    val raw = XmlFile.read(spark.sparkContext, pathFor(parameters), options, plan)
+    InferSchema.resolve(raw, options, plan.parallelism)
   }
 }
 
@@ -171,24 +170,14 @@ private[v2] case class XmlScan(
   @transient private lazy val options = XmlOptions(parameters)
 
   // One driver-side listing per scan, shared by planInputPartitions and
-  // estimateStatistics. Split sizing follows the DSv1 policy exactly: an
-  // explicit splitMaxBytes option wins, else pack into >= defaultParallelism
-  // splits within [4 MB, 128 MB], else leave Hadoop defaults.
+  // estimateStatistics; the splits are the ones the DSv1 relation plans.
+  @transient private lazy val inputConf: Configuration = XmlFile.inputConf(
+    spark.sparkContext, options,
+    XmlFile.plan(spark.sparkContext, XmlTable.pathFor(parameters), options))
+
   @transient private lazy val splits: Seq[XmlInputPartition] = {
-    val path = XmlTable.pathFor(parameters)
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set(XmlInputFormat.ROW_TAG_KEY, options.rowTag)
-    conf.set(XmlInputFormat.ENCODING_KEY, options.charset)
-    options.splitMaxBytes
-      .orElse(XmlFile.splitMaxSizeFor(spark.sparkContext, path))
-      .foreach { maxSplit =>
-        if (options.splitMaxBytes.isDefined ||
-            conf.get("mapreduce.input.fileinputformat.split.maxsize") == null) {
-          conf.setLong("mapreduce.input.fileinputformat.split.maxsize", maxSplit)
-        }
-      }
-    val job = Job.getInstance(conf)
-    FileInputFormat.setInputPaths(job, path)
+    val job = Job.getInstance(inputConf)
+    FileInputFormat.setInputPaths(job, XmlTable.pathFor(parameters))
     new XmlInputFormat().getSplits(job).asScala.toSeq.map { s =>
       val fs = s.asInstanceOf[FileSplit]
       XmlInputPartition(
@@ -205,9 +194,6 @@ private[v2] case class XmlScan(
     splits.toArray[InputPartition]
 
   override def createReaderFactory(): PartitionReaderFactory = {
-    val conf = new Configuration(spark.sparkContext.hadoopConfiguration)
-    conf.set(XmlInputFormat.ROW_TAG_KEY, options.rowTag)
-    conf.set(XmlInputFormat.ENCODING_KEY, options.charset)
     // Malformedness is defined against the full row (same rule as the DSv1
     // relation): when the query observes it — corrupt column selected, or
     // DROPMALFORMED decides row existence — parse the full schema and
@@ -221,7 +207,7 @@ private[v2] case class XmlScan(
         RawRecordFilter.compile(pushed, fullSchema, options)
       } else Array.empty[Array[String]]
     XmlPartitionReaderFactory(
-      new SerializableHadoopConf(conf), parameters,
+      new SerializableHadoopConf(inputConf), parameters,
       if (parseFull) fullSchema else requiredSchema,
       if (parseFull) Some(requiredSchema) else None,
       preGroups)

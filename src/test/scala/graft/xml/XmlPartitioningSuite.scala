@@ -45,18 +45,60 @@ class XmlPartitioningSuite extends AnyFunSuite {
     (plain.toString, gz.toString, bz.toString)
   }
 
-  test("size-aware split packing spreads a large file across the cluster") {
-    // ~8 MB single file on local[4]: the packing policy (total/parallelism,
-    // clamped to >= 4 MB) must yield 2 MB->4 MB splits, i.e. 2 partitions —
-    // not the 1 split a 32 MB block size would give.
-    val dir = Files.createTempDirectory("graft-split-packing")
+  /** A single-file `<houses>` document of about `bytes` bytes in its own
+   *  directory; returns the file. */
+  private def housesFile(bytes: Int): Path = {
+    val dir = Files.createTempDirectory("graft-split-plan")
     val row = s"""<house id="1"><num>1</num><addr>${"x" * 100}</addr></house>\n"""
-    val sb = new StringBuilder(9 << 20)
+    val sb = new StringBuilder(bytes + 256)
     sb.append("<houses>\n")
-    while (sb.length < (8 << 20)) sb.append(row)
+    while (sb.length < bytes) sb.append(row)
     sb.append("</houses>\n")
-    val big = dir.resolve("big.xml")
-    Files.write(big, sb.toString.getBytes("UTF-8"))
+    Files.write(dir.resolve("houses.xml"), sb.toString.getBytes("UTF-8"))
+  }
+
+  private val housesSchema = "_id LONG, num LONG, addr STRING"
+
+  private def v1Partitions(path: Path): Int =
+    spark.read.format("graft.xml").option("rowTag", "house")
+      .schema(housesSchema).load(path.toString).rdd.getNumPartitions
+
+  /** Job starts of `body`'s jobs, once every one of them has ended. */
+  private def jobsOf(body: => Unit): Seq[org.apache.spark.scheduler.SparkListenerJobStart] = {
+    import org.apache.spark.scheduler._
+    val group = s"graft-jobs-${System.nanoTime}"
+    val starts = new java.util.concurrent.ConcurrentLinkedQueue[SparkListenerJobStart]()
+    val ended = new java.util.concurrent.atomic.AtomicInteger()
+    val mine = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val listener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        if (js.properties != null && js.properties.getProperty("spark.jobGroup.id") == group) {
+          mine.add(js.jobId); starts.add(js)
+        }
+      override def onJobEnd(je: SparkListenerJobEnd): Unit =
+        if (mine.contains(je.jobId)) ended.incrementAndGet()
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "split plan spec")
+      try body finally sc.clearJobGroup()
+      // Job ends are posted before the action returns; the bus delivers
+      // them asynchronously.
+      val deadline = System.nanoTime + 10000000000L
+      while ((starts.isEmpty || ended.get < starts.size) && System.nanoTime < deadline) {
+        Thread.sleep(20)
+      }
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    starts.asScala.toSeq
+  }
+
+  test("size-aware split packing spreads a large file across the cluster") {
+    // ~8 MB single file on local[4]: the split plan (total/parallelism,
+    // clamped to >= 512 KB) must yield 2 MB splits, i.e. 4 partitions —
+    // not the 1 split a 32 MB block size would give.
+    val big = housesFile(8 << 20)
     // This test intentionally exercises the global-conf precedence contract,
     // so it must touch the shared key: snapshot + restore (no assume-skip),
     // and it is the only suite left that mutates it — the sweep tests use
@@ -68,7 +110,7 @@ class XmlPartitioningSuite extends AnyFunSuite {
       conf.unset(key)
       val df = spark.read.format("graft.xml").option("rowTag", "house")
         .schema("_id LONG, num LONG, addr STRING").load(big.toString)
-      assert(df.rdd.getNumPartitions === 2)
+      assert(df.rdd.getNumPartitions === 4)
       // An explicit global Hadoop setting wins over the packing policy.
       conf.set(key, "1048576")
       val df2 = spark.read.format("graft.xml").option("rowTag", "house")
@@ -100,5 +142,60 @@ class XmlPartitioningSuite extends AnyFunSuite {
         assert(ids.toSeq === (0 until n).map(_.toLong), s"split=$splitSize path=$path")
       }
     }
+  }
+
+  test("a 3.5 MB file fills every core; a file under the 512 KB floor stays one split") {
+    assert(v1Partitions(housesFile(3584 << 10)) === 4)
+    assert(v1Partitions(housesFile(400 << 10)) === 1)
+  }
+
+  test("V1, V2 and a stream batch over the same file plan the same splits") {
+    val file = housesFile(3584 << 10)
+    val dir = file.getParent.toString
+    val v2 = spark.read.format("xmlng2").option("rowTag", "house")
+      .schema(housesSchema).load(dir).rdd.getNumPartitions
+    @volatile var streamed = -1
+    val q = spark.readStream.format("xmlng").option("rowTag", "house")
+      .schema(housesSchema).load(dir)
+      .writeStream
+      .option("checkpointLocation", Files.createTempDirectory("graft-split-ckpt").toString)
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        if (!batch.isEmpty) streamed = batch.rdd.getNumPartitions
+      }
+      .start()
+    try q.processAllAvailable() finally q.stop()
+    assert(v1Partitions(file.getParent) === 4)
+    assert(v2 === 4)
+    assert(streamed === 4)
+  }
+
+  test("inference spreads only as far as the input warrants") {
+    // A sub-floor file warrants one task: one stage, no shuffle.
+    val small = housesFile(100 << 10)
+    val fileJobs = jobsOf {
+      spark.read.format("graft.xml").option("rowTag", "house").load(small.toString)
+    }
+    assert(fileJobs.nonEmpty)
+    assert(fileJobs.map(_.stageInfos.size).sum === 1,
+      s"stages: ${fileJobs.flatMap(_.stageInfos.map(_.name))}")
+    assert(fileJobs.flatMap(_.stageInfos).forall(_.parentIds.isEmpty))
+    // Records of unknown size (schema_of_xml over a 1-partition Dataset)
+    // still spread to defaultParallelism through one shuffle.
+    val records = (0 until 200).map(i => s"<house><num>$i</num></house>")
+    val ds = spark.createDataset(spark.sparkContext.parallelize(records, 1))(
+      org.apache.spark.sql.Encoders.STRING)
+    val dsJobs = jobsOf(graft.xml.schema_of_xml(ds))
+    val stages = dsJobs.flatMap(_.stageInfos)
+    assert(stages.size === 2, s"stages: ${stages.map(_.name)}")
+    assert(stages.map(_.numTasks).max === spark.sparkContext.defaultParallelism)
+  }
+
+  test("state partitions measure a file: URI input directory") {
+    // Sparse 130 MB file: 130 MB / 64 MB + 1 = 3 state partitions (cap 4).
+    val dir = Files.createTempDirectory("graft-state-bytes")
+    val raf = new java.io.RandomAccessFile(dir.resolve("part-0.xml").toFile, "rw")
+    try raf.setLength(130L << 20) finally raf.close()
+    assert(graft.SparkEntry.stateShufflePartitions(spark, Seq(dir.toString)) === 3)
+    assert(graft.SparkEntry.stateShufflePartitions(spark, Seq(dir.toUri.toString)) === 3)
   }
 }
