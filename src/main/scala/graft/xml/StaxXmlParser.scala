@@ -47,9 +47,10 @@ private[graft] object StaxXmlParser {
   }
 
   /**
-   * Per-partition entry point shared by the RDD path above and the DSv2
-   * [[graft.xml.v2.XmlPartitionReader]]: XSD validation (when configured),
-   * the StAX parse, and parse-mode malformed handling, one record at a time.
+   * Per-partition entry point shared by the RDD path above and
+   * [[XmlScanSpec.rows]], through which the DSv1 relation, the DSv2 reader
+   * and stream batches parse: XSD validation (when configured), the StAX
+   * parse, and parse-mode malformed handling, one record at a time.
    */
   def parseIterator(
       iter: Iterator[String],

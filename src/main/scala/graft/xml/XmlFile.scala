@@ -1,6 +1,6 @@
 package graft.xml
 
-import java.nio.charset.Charset
+import java.nio.charset.{Charset, StandardCharsets}
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.io.{LongWritable, NullWritable, Text}
@@ -95,15 +95,18 @@ private[graft] object XmlFile {
         classOf[Text],
         inputConf(sc, options, plan))
       .mapPartitions { iter =>
-        // Non-ASCII-compatible input was decoded to UTF-8 by the record
-        // reader (TranscodingInputStream), so record bytes are then UTF-8
-        // regardless of the file charset.
-        val cs = Charset.forName(charsetName)
-        val charset =
-          if (XmlInputFormat.isAsciiCompatible(cs)) cs
-          else java.nio.charset.StandardCharsets.UTF_8
-        iter.map { case (_, text) => new String(text.getBytes, 0, text.getLength, charset) }
+        val decode = recordDecoder(charsetName)
+        iter.map { case (_, text) => decode(text) }
       }
+  }
+
+  /** Record bytes from [[XmlInputFormat]]'s reader → record string. Input
+   *  in a non-ASCII-compatible charset was transcoded to UTF-8 by the reader
+   *  (TranscodingInputStream), so its records decode as UTF-8. */
+  def recordDecoder(charsetName: String): Text => String = {
+    val cs = Charset.forName(charsetName)
+    val charset = if (XmlInputFormat.isAsciiCompatible(cs)) cs else StandardCharsets.UTF_8
+    text => new String(text.getBytes, 0, text.getLength, charset)
   }
 
   /** Total byte size of the files `path` names (comma-separated, globs ok,
@@ -126,9 +129,7 @@ private[graft] object XmlFile {
 
   def save(df: DataFrame, path: String, options: XmlOptions): Unit = {
     val schema = df.schema
-    // rootTag may carry inline attributes ("books count=\"3\""); only the
-    // name part closes the document (reference: XmlFile.scala:88-101).
-    val rootTagName = options.rootTag.split(" ", 2)(0)
+    val documentEnd = options.documentEnd
     val codecClass: Option[Class[_ <: CompressionCodec]] = options.codec.map { name =>
       resolveCodec(name)
     }
@@ -170,20 +171,16 @@ private[graft] object XmlFile {
         override def next(): (NullWritable, Text) = {
           if (!begun) {
             begun = true
-            val header = new StringBuilder
-            if (options.declaration.nonEmpty) {
-              header ++= s"<?xml ${options.declaration}?>\n"
-            }
-            header ++= s"<${options.rootTag}>"
-            if (!rows.hasNext) { ended = true; header ++= s"\n</$rootTagName>" }
-            text.set(header.result())
+            var header = options.documentStart
+            if (!rows.hasNext) { ended = true; header += "\n" + documentEnd }
+            text.set(header)
           } else if (rows.hasNext) {
             sb.setLength(0)
             val emitter = new XmlEmitter(sb, baseDepth = 1, compact = options.compactOutput)
             gen.write(emitter, rows.next())
             if (!rows.hasNext) {
               ended = true
-              sb.append('\n').append("</").append(rootTagName).append('>')
+              sb.append('\n').append(documentEnd)
             }
             // Pretty mode: strip the emitter's leading newline — the sink
             // writes one per record. Compact rows start at '<'.

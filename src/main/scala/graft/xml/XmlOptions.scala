@@ -85,6 +85,15 @@ class XmlOptions(@transient private val raw: Map[String, String]) extends Serial
    */
   val maxRecordsPerFile: Option[Long] = get("maxRecordsPerFile").map(_.toLong)
 
+  /** What opens every written document: the declaration, if any, then
+   *  `<rootTag>`. */
+  def documentStart: String =
+    (if (declaration.nonEmpty) s"<?xml $declaration?>\n" else "") + s"<$rootTag>"
+  /** What closes it. `rootTag` may carry inline attributes
+   *  ("books count=\"3\""); only its name closes the document (reference:
+   *  XmlFile.scala:88-101). */
+  def documentEnd: String = s"</${rootTag.split(" ", 2)(0)}>"
+
   require(rowTag.nonEmpty, "'rowTag' option must not be empty")
   require(splitMaxBytes.forall(_ > 0), "'splitMaxBytes' must be positive")
   require(maxRecordsPerFile.forall(_ > 0), "'maxRecordsPerFile' must be positive")

@@ -87,7 +87,6 @@ object XmlPartitioned {
       require(df.schema.fieldNames.contains(c), s"unknown partition column '$c'")
     }
     val opts = new XmlOptions(options)
-    val rootTagName = opts.rootTag.split(" ", 2)(0)
     val subdir = concat_ws("/", partitionCols.map { c =>
       concat(lit(s"$c="), escapedValue(col(c)))
     }: _*)
@@ -100,20 +99,13 @@ object XmlPartitioned {
       .sortWithinPartitions(partitionCols.map(col): _*)
       .select(dataCols.map(col) :+ subdir.as("__dir"): _*)
 
-    val declaration = opts.declaration
-    val rootTag = opts.rootTag
+    val header = opts.documentStart
+    val footer = opts.documentEnd
     val compact = opts.compactOutput
     val optMap = options
     val dirIdx = dataSchema.length
     val rendered = prepared.queryExecution.toRdd.mapPartitions { rows =>
       val gen = new StaxXmlGenerator(dataSchema, new XmlOptions(optMap))
-      val header = {
-        val h = new StringBuilder
-        if (declaration.nonEmpty) h ++= s"<?xml $declaration?>\n"
-        h ++= s"<$rootTag>"
-        h.result()
-      }
-      val footer = s"</$rootTagName>"
       new Iterator[(Text, Text)] {
         private var current: String = null
         private var pending: mutable.Queue[(Text, Text)] = mutable.Queue.empty

@@ -3,6 +3,7 @@ package graft.xml
 import org.apache.hadoop.fs.Path
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, Row, SQLContext, SaveMode}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
 import org.apache.spark.sql.sources._
 import org.apache.spark.sql.types._
 
@@ -81,8 +82,9 @@ private[xml] object RawRecordFilter {
  * so a 2-column projection over a 100-column document never materializes
  * the other 98; pushed string predicates become a raw-substring pre-test
  * ([[RawRecordFilter]]) that skips the StAX parse of records that cannot
- * match. All other relational work (joins, aggregates, windows, …) is
- * planned by Catalyst above this scan.
+ * match. Both follow [[XmlScanSpec]], the scan rule shared with the DSv2
+ * reader and stream batches. All other relational work (joins, aggregates,
+ * windows, …) is planned by Catalyst above this scan.
  */
 case class XmlRelation(
     location: String,
@@ -112,43 +114,9 @@ case class XmlRelation(
   override def unhandledFilters(filters: Array[Filter]): Array[Filter] = filters
 
   override def buildScan(requiredColumns: Array[String], filters: Array[Filter]): RDD[Row] = {
-    val requested =
-      if (requiredColumns.isEmpty) schema
-      else StructType(requiredColumns.flatMap(c => schema.fields.find(_.name == c)))
-    // FAILFAST must see every record: a pre-dropped malformed record would
-    // let a query succeed that is contractually required to throw.
-    val preGroups =
-      if (options.rawFilterPushdown && options.parseMode != ParseMode.FailFast) {
-        RawRecordFilter.compile(filters, schema, options)
-      } else Array.empty[Array[String]]
-    def rawRecords(): RDD[String] = {
-      val raw = baseRDD()
-      if (preGroups.isEmpty) raw
-      else raw.filter(rec => preGroups.forall(g => g.exists(rec.contains)))
-    }
-    // Malformedness is defined against the full row: a pruned parse would
-    // never attempt the casts of unselected columns, silently changing what
-    // counts as corrupt. When the query observes malformedness — it selects
-    // the corrupt-record column, or the mode drops bad rows — parse the full
-    // schema and project afterwards.
-    val observesMalformed =
-      requiredColumns.contains(options.columnNameOfCorruptRecord) ||
-        options.parseMode == ParseMode.DropMalformed
-    if (!observesMalformed || requested.length == schema.length) {
-      StaxXmlParser.parse(rawRecords(), requested, options).asInstanceOf[RDD[Row]]
-    } else {
-      val full = schema
-      val idxs = requested.fieldNames.map(full.fieldIndex)
-      val types = idxs.map(i => full(i).dataType)
-      StaxXmlParser.parse(rawRecords(), full, options)
-        .map { row =>
-          val values = new Array[Any](idxs.length)
-          var i = 0
-          while (i < idxs.length) { values(i) = row.get(idxs(i), types(i)); i += 1 }
-          new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(values):
-            org.apache.spark.sql.catalyst.InternalRow
-        }.asInstanceOf[RDD[Row]]
-    }
+    val required = StructType(requiredColumns.flatMap(c => schema.fields.find(_.name == c)))
+    val spec = XmlScanSpec(schema, required, filters, options)
+    baseRDD().mapPartitions(spec.rows).asInstanceOf[RDD[Row]]
   }
 
   override def insert(data: DataFrame, overwrite: Boolean): Unit = {
@@ -286,7 +254,10 @@ class DefaultSource
     val exists = fs.exists(path)
     val doSave = mode match {
       case SaveMode.Overwrite =>
-        if (exists) fs.delete(path, true)
+        if (exists) {
+          requireNotReadFrom(data, fs.makeQualified(path))
+          fs.delete(path, true)
+        }
         true
       case SaveMode.ErrorIfExists if exists =>
         throw new IllegalStateException(s"path $location already exists")
@@ -298,6 +269,24 @@ class DefaultSource
     }
     if (doSave) XmlFile.save(data, location, options)
     createRelation(sqlContext, parameters, data.schema)
+  }
+
+  /** Overwrite deletes the target before the job runs, so a frame that
+   *  reads the target, or a path under it, would find nothing to write. */
+  private def requireNotReadFrom(data: DataFrame, target: Path): Unit = {
+    val conf = data.sparkSession.sparkContext.hadoopConfiguration
+    val reads = data.queryExecution.analyzed.collectWithSubqueries {
+      case LogicalRelation(r: XmlRelation, _, _, _, _) => r.location.split(",").toSeq
+    }.flatten
+    val readsTarget = reads.exists { loc =>
+      val p = new Path(loc.trim)
+      Iterator.iterate(p.getFileSystem(conf).makeQualified(p))(_.getParent)
+        .takeWhile(_ != null).contains(target)
+    }
+    if (readsTarget) {
+      throw new IllegalArgumentException(
+        s"Cannot overwrite a path that is also being read from: $target")
+    }
   }
 }
 

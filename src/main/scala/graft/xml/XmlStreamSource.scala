@@ -59,7 +59,8 @@ import org.apache.spark.sql.types.StructType
  * FileStreamSource.
  *
  * The actual data read is executor-side and split-parallel via
- * [[XmlFile.read]].
+ * [[XmlFile.read]], and each batch makes its rows by [[XmlScanSpec]], the
+ * batch relation's scan rule.
  */
 private[xml] class XmlStreamSource(
     sqlContext: SQLContext,
@@ -314,8 +315,8 @@ private[xml] class XmlStreamSource(
       val sc = sqlContext.sparkContext
       val plan = XmlFile.plan(sc, Some(entries.map(_.len).sum), options)
       val raw = XmlFile.read(sc, entries.map(_.path).mkString(","), options, plan)
-      Bridge.internalCreateStreamingDataFrame(
-        spark, StaxXmlParser.parse(raw, schema, options), schema)
+      val spec = XmlScanSpec(schema, schema, Array.empty, options)
+      Bridge.internalCreateStreamingDataFrame(spark, raw.mapPartitions(spec.rows), schema)
     }
   }
 

@@ -12,28 +12,28 @@ import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.connector.catalog.{SupportsRead, SupportsWrite, Table, TableCapability, TableProvider}
 import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, WriteBuilder}
 import org.apache.spark.sql.sources.{DataSourceRegister, Filter}
-import org.apache.spark.sql.types.{DataType, StructType}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-import graft.xml.{InferSchema, ParseMode, RawRecordFilter, StaxXmlParser, XmlFile, XmlInputFormat, XmlOptions}
+import graft.xml.{InferSchema, XmlFile, XmlInputFormat, XmlOptions, XmlScanSpec}
 
 /**
  * DataSource V2 read path for the XML source, registered as `xmlng2`
  * (`spark.read.format("xmlng2")`). The round-3 verdict asked for a DSv2
  * migration spike; this is the working result, not just a finding.
  *
- * Division of labor with the DSv1 `xmlng` source: V2 reuses the exact same
- * scan machinery — [[XmlInputFormat]] for split-parallel record extraction
- * (same split-packing policy), [[StaxXmlParser.parseIterator]] for
- * record→InternalRow, [[RawRecordFilter]] for the raw-substring pre-test —
- * so both paths produce identical rows from identical splits. What V2 adds
- * over DSv1:
+ * Division of labor with the DSv1 `xmlng` source: V2 keeps only connector
+ * plumbing — splits, statistics, pushdown negotiation and the reader
+ * lifecycle. Records come from the same [[XmlInputFormat]] splits (same
+ * split plan) and [[XmlFile.recordDecoder]], and become rows through
+ * [[XmlScanSpec]], the DSv1 relation's own scan rule (pre-test, full or
+ * pruned parse, projection), so both paths produce identical rows from
+ * identical splits. What V2 adds over DSv1:
  *
  *  - `SupportsReportStatistics`: the scan reports its input byte size, so
  *    Catalyst auto-broadcasts a small XML dimension table without an
@@ -143,13 +143,10 @@ private[v2] final class XmlScanBuilder(
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     // The raw-substring pre-test is a necessary condition only, so every
     // filter must still be evaluated above the scan: all filters are
-    // returned as post-scan residuals, and the ones that compiled into the
-    // pre-test are additionally reported as pushed (best-effort pushdown —
-    // the V2 contract explicitly allows a filter in both sets).
-    pushed =
-      if (options.rawFilterPushdown && options.parseMode != ParseMode.FailFast) {
-        filters.filter(f => RawRecordFilter.compile(Array(f), fullSchema, options).nonEmpty)
-      } else Array.empty
+    // returned as post-scan residuals, and the ones the pre-test uses are
+    // additionally reported as pushed (best-effort pushdown — the V2
+    // contract explicitly allows a filter in both sets).
+    pushed = XmlScanSpec.pushed(filters, fullSchema, options)
     filters
   }
 
@@ -193,25 +190,9 @@ private[v2] case class XmlScan(
   override def planInputPartitions(): Array[InputPartition] =
     splits.toArray[InputPartition]
 
-  override def createReaderFactory(): PartitionReaderFactory = {
-    // Malformedness is defined against the full row (same rule as the DSv1
-    // relation): when the query observes it — corrupt column selected, or
-    // DROPMALFORMED decides row existence — parse the full schema and
-    // project afterwards; otherwise parse just the pruned schema.
-    val observesMalformed =
-      requiredSchema.fieldNames.contains(options.columnNameOfCorruptRecord) ||
-        options.parseMode == ParseMode.DropMalformed
-    val parseFull = observesMalformed && requiredSchema.length != fullSchema.length
-    val preGroups =
-      if (options.rawFilterPushdown && options.parseMode != ParseMode.FailFast) {
-        RawRecordFilter.compile(pushed, fullSchema, options)
-      } else Array.empty[Array[String]]
-    XmlPartitionReaderFactory(
-      new SerializableHadoopConf(inputConf), parameters,
-      if (parseFull) fullSchema else requiredSchema,
-      if (parseFull) Some(requiredSchema) else None,
-      preGroups)
-  }
+  override def createReaderFactory(): PartitionReaderFactory =
+    XmlPartitionReaderFactory(new SerializableHadoopConf(inputConf),
+      XmlScanSpec(fullSchema, requiredSchema, pushed, options))
 
   override def estimateStatistics(): Statistics = new Statistics {
     // Raw XML overstates in-memory row width, so this is a conservative
@@ -237,32 +218,22 @@ private[v2] case class XmlInputPartition(
 
 private[v2] case class XmlPartitionReaderFactory(
     conf: SerializableHadoopConf,
-    parameters: Map[String, String],
-    parseSchema: StructType,
-    projectTo: Option[StructType],
-    preGroups: Array[Array[String]]) extends PartitionReaderFactory {
+    spec: XmlScanSpec) extends PartitionReaderFactory {
 
-  override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
-    val p = partition.asInstanceOf[XmlInputPartition]
-    new XmlPartitionReader(p, conf.value, parameters, parseSchema, projectTo, preGroups)
-  }
+  override def createReader(partition: InputPartition): PartitionReader[InternalRow] =
+    new XmlPartitionReader(partition.asInstanceOf[XmlInputPartition], conf.value, spec)
 }
 
 /**
- * Executor-side reader for one file split: drives the same Hadoop
- * [[XmlInputFormat]] record reader the RDD path uses, decodes record bytes
- * with the same charset rule, applies the raw pre-filter, and parses via
- * [[StaxXmlParser.parseIterator]] — guaranteeing V1/V2 row identity.
+ * Executor-side reader for one file split: the same Hadoop
+ * [[XmlInputFormat]] record reader the RDD path uses, then
+ * [[XmlFile.recordDecoder]], then [[XmlScanSpec.rows]] — the steps of
+ * [[XmlFile.read]] and the DSv1 relation, so V1 and V2 rows are identical.
  */
 private[v2] final class XmlPartitionReader(
     partition: XmlInputPartition,
     conf: Configuration,
-    parameters: Map[String, String],
-    parseSchema: StructType,
-    projectTo: Option[StructType],
-    preGroups: Array[Array[String]]) extends PartitionReader[InternalRow] {
-
-  private val options = XmlOptions(parameters)
+    spec: XmlScanSpec) extends PartitionReader[InternalRow] {
 
   private val hadoopReader = {
     val split = new FileSplit(new Path(partition.filePath), partition.start, partition.length, null)
@@ -272,49 +243,10 @@ private[v2] final class XmlPartitionReader(
     r
   }
 
-  private val charset = {
-    val cs = java.nio.charset.Charset.forName(options.charset)
-    // Non-ASCII-compatible input was transcoded to UTF-8 by the record reader.
-    if (XmlInputFormat.isAsciiCompatible(cs)) cs
-    else java.nio.charset.StandardCharsets.UTF_8
-  }
-
-  private val rawRecords: Iterator[String] = new Iterator[String] {
-    private var ready = false
-    private var done = false
-    override def hasNext: Boolean = {
-      if (!ready && !done) {
-        done = !hadoopReader.nextKeyValue()
-        ready = !done
-      }
-      ready
-    }
-    override def next(): String = {
-      if (!hasNext) throw new NoSuchElementException("split exhausted")
-      ready = false
-      val t = hadoopReader.getCurrentValue
-      new String(t.getBytes, 0, t.getLength, charset)
-    }
-  }
-
-  private val filtered =
-    if (preGroups.isEmpty) rawRecords
-    else rawRecords.filter(rec => preGroups.forall(g => g.exists(rec.contains)))
-
   private val rows: Iterator[InternalRow] = {
-    val parsed = StaxXmlParser.parseIterator(filtered, parseSchema, options)
-    projectTo match {
-      case None => parsed
-      case Some(required) =>
-        val idxs = required.fieldNames.map(parseSchema.fieldIndex)
-        val types: Array[DataType] = idxs.map(i => parseSchema(i).dataType)
-        parsed.map { row =>
-          val values = new Array[Any](idxs.length)
-          var i = 0
-          while (i < idxs.length) { values(i) = row.get(idxs(i), types(i)); i += 1 }
-          new GenericInternalRow(values): InternalRow
-        }
-    }
+    val decode = XmlFile.recordDecoder(spec.options.charset)
+    spec.rows(Iterator.continually(hadoopReader.nextKeyValue()).takeWhile(identity)
+      .map(_ => decode(hadoopReader.getCurrentValue)))
   }
 
   private var current: InternalRow = _

@@ -196,8 +196,6 @@ private[v2] final class XmlDataWriter(
     taskId: Long) extends DataWriter[InternalRow] {
 
   private val options = XmlOptions(parameters)
-  // rootTag may carry inline attributes; only the name part closes the doc
-  private val rootTagName = options.rootTag.split(" ", 2)(0)
   private val codec = options.codec.map { name =>
     ReflectionUtils.newInstance(XmlFile.resolveCodec(name), conf)
   }
@@ -230,15 +228,14 @@ private[v2] final class XmlDataWriter(
     val wrapped = codec.map(_.createOutputStream(raw)).getOrElse(raw)
     out = new OutputStreamWriter(
       new BufferedOutputStream(wrapped, 1 << 16), Charset.forName(options.charset))
-    if (options.declaration.nonEmpty) out.write(s"<?xml ${options.declaration}?>\n")
-    out.write(s"<${options.rootTag}>")
+    out.write(options.documentStart)
   }
 
   /** Closes the open document (footer + stream) and records its publish
    *  pair. No-op when nothing is open — e.g. a roll landed exactly on the
    *  last record of the partition. */
   private def closeCurrent(): Unit = if (out != null) {
-    out.write(s"\n</$rootTagName>\n")
+    out.write(s"\n${options.documentEnd}\n")
     out.close()
     out = null
     filesWritten ::= (currentStaged.toString, finalName(seq))

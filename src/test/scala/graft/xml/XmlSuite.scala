@@ -166,6 +166,14 @@ class XmlSuite extends AnyFunSuite with BeforeAndAfterAll {
       .option("rowTag", "ROW").option("mode", "DROPMALFORMED").load(path)
       .select("b").collect()
     assert(survivors.map(_.getString(0)).toSeq === Seq("x"))
+
+    // FAILFAST must throw on the bad row even when only `b` is selected.
+    intercept[Exception] {
+      spark.read.format("graft.xml")
+        .schema(StructType(schema.dropRight(1)))
+        .option("rowTag", "ROW").option("mode", "FAILFAST").load(path)
+        .select("b").collect()
+    }
   }
 
   test("roundtrip write → read preserves typed values") {
@@ -183,6 +191,19 @@ class XmlSuite extends AnyFunSuite with BeforeAndAfterAll {
     val back = spark.read.format("graft.xml").schema(schema)
       .option("rowTag", "item").load(out)
     assert(back.orderBy("id").collect().toSeq === df.orderBy("id").collect().toSeq)
+  }
+
+  test("overwrite refuses a target the written frame reads") {
+    import spark.implicits._
+    val out = tmp.resolve("self-overwrite").toString
+    Seq((1L, "a"), (2L, "b"), (3L, "c")).toDF("id", "name")
+      .write.format("xmlng").mode("overwrite").option("rowTag", "r").save(out)
+    def read() = spark.read.format("xmlng").option("rowTag", "r").load(out)
+    val e = intercept[IllegalArgumentException] {
+      read().write.format("xmlng").mode("overwrite").option("rowTag", "r").save(out)
+    }
+    assert(e.getMessage.contains("Cannot overwrite a path that is also being read from"))
+    assert(read().count() === 3)
   }
 
   test("roundtrip with inferred schema") {

@@ -102,6 +102,34 @@ class XmlV2Suite extends AnyFunSuite {
     assert(got.toSeq === read("xmlng").select("name").collect().map(_.getString(0)).sorted.toSeq)
   }
 
+  test("every parse mode gives v1 and v2 the same rows, or makes both throw") {
+    val xml =
+      """<ROWSET>
+        |  <ROW><a>1</a><b>x</b></ROW>
+        |  <ROW><a>oops</a><b>y</b></ROW>
+        |</ROWSET>
+        |""".stripMargin
+    val dir = Files.createTempDirectory("graft_v2_modes")
+    Files.write(dir.resolve("bad.xml"), xml.getBytes("UTF-8"))
+    val ab = StructType(Seq(StructField("a", LongType), StructField("b", StringType)))
+    def outcome(fmt: String, mode: String, query: DataFrame => Seq[String]): Either[String, Seq[String]] = {
+      val df = spark.read.format(fmt).option("rowTag", "ROW").option("mode", mode)
+        .schema(ab).load(dir.toString)
+      try Right(query(df).sorted)
+      catch { case e: Exception => Left(e.getClass.getSimpleName) }
+    }
+    val queries: Seq[(String, DataFrame => Seq[String])] = Seq(
+      "count" -> (df => Seq(df.count().toString)),
+      "b only" -> (df => df.select("b").collect().map(_.toString).toSeq),
+      "full" -> (df => df.collect().map(_.toString).toSeq))
+    for (mode <- Seq("PERMISSIVE", "DROPMALFORMED", "FAILFAST"); (name, query) <- queries) {
+      val v1 = outcome("xmlng", mode, query)
+      val v2 = outcome("xmlng2", mode, query)
+      assert(v2 === v1, s"$mode $name")
+      assert(v1.isLeft === (mode == "FAILFAST"), s"$mode $name: $v1")
+    }
+  }
+
   test("multi-split v2 read returns every record exactly once") {
     val q = spark.read.format("xmlng2")
       .option("rowTag", "r").option("splitMaxBytes", "2048")
