@@ -1,24 +1,28 @@
 package graft.xml
 
 import java.nio.charset.{Charset, StandardCharsets}
+import java.util.UUID
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.io.{LongWritable, NullWritable, Text}
+import org.apache.hadoop.io.{LongWritable, Text}
 import org.apache.hadoop.io.compress.CompressionCodec
-import org.apache.spark.SparkContext
+import org.apache.spark.{SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.connector.write.PhysicalWriteInfo
 
 
 /**
- * File-level entry points: records-RDD extraction for the read path and
- * partition-wise XML serialization for the write path (reference:
+ * File-level entry points: split planning and records-RDD extraction for
+ * the read path, and the batch save that runs the V2 writer (reference:
  * src/main/scala/com/databricks/spark/xml/util/XmlFile.scala:39-161).
  *
- * Write layout: each task writes one part file that is a complete XML
- * document (`declaration`, `<rootTag>`, one `<rowTag>` element per row,
- * `</rootTag>`), so part files are independently parseable — the property
- * that makes a 100 TB corpus embarrassingly parallel to re-read.
+ * Write layout: each task writes its part files through
+ * [[v2.XmlBatchWrite]], each a complete XML document (`declaration`,
+ * `<rootTag>`, one `<rowTag>` element per row, `</rootTag>`), so part
+ * files are independently parseable — the property that makes a 100 TB
+ * corpus embarrassingly parallel to re-read.
  */
 private[graft] object XmlFile {
 
@@ -127,81 +131,40 @@ private[graft] object XmlFile {
     } catch { case _: Exception => None }
   }
 
+  /**
+   * Writes `df` under `path` through the V2 writer, without planning a
+   * second query: one job over the frame's rows, in which every task stages
+   * its part files through a `v2.XmlDataWriter`, then one driver-side
+   * [[v2.XmlBatchWrite]] commit that renames them into place. A failed task
+   * aborts its writer and a failed job aborts the write. Callers apply the
+   * save mode first.
+   */
   def save(df: DataFrame, path: String, options: XmlOptions): Unit = {
-    val schema = df.schema
-    val documentEnd = options.documentEnd
-    val codecClass: Option[Class[_ <: CompressionCodec]] = options.codec.map { name =>
-      resolveCodec(name)
-    }
-    // Serialize from InternalRow directly: the external `df.rdd` conversion
-    // (boxing every numeric, decoding every string) dominated write cost.
-    // The sink mirrors saveAsTextFile (same old-API TextOutputFormat, same
-    // NullWritable-key value-plus-newline layout, same reused Text) but
-    // fills the Text bytes straight from the builder — all-ASCII rows (the
-    // common case for XML) never materialize a per-row String, rows with
-    // non-ASCII text fall back to the JDK encoder for exact parity.
-    val rendered = df.queryExecution.toRdd.mapPartitions { rows =>
-      // One reusable builder + Text per partition; each next() yields one
-      // text line block (header, row, or row+footer).
-      val sb = new java.lang.StringBuilder(1 << 16)
-      val gen = new StaxXmlGenerator(schema, options)
-      val text = new Text()
-      var buf = new Array[Byte](1 << 16)
-      // Fill `text` with the UTF-8 encoding of sb[from..sb.length).
-      def fillText(from: Int): Unit = {
-        val len = sb.length
-        if (buf.length < len - from) {
-          buf = new Array[Byte](Integer.highestOneBit(len - from) << 1)
-        }
-        var i = from
-        var bi = 0
-        var ascii = true
-        while (ascii && i < len) {
-          val c = sb.charAt(i)
-          if (c < 0x80) { buf(bi) = c.toByte; bi += 1; i += 1 }
-          else ascii = false
-        }
-        if (ascii) text.set(buf, 0, bi)
-        else text.set(sb.substring(from)) // JDK-exact encode for non-ASCII
-      }
-      new Iterator[(NullWritable, Text)] {
-        private var begun = false
-        private var ended = false
-        override def hasNext: Boolean = !ended
-        override def next(): (NullWritable, Text) = {
-          if (!begun) {
-            begun = true
-            var header = options.documentStart
-            if (!rows.hasNext) { ended = true; header += "\n" + documentEnd }
-            text.set(header)
-          } else if (rows.hasNext) {
-            sb.setLength(0)
-            val emitter = new XmlEmitter(sb, baseDepth = 1, compact = options.compactOutput)
-            gen.write(emitter, rows.next())
-            if (!rows.hasNext) {
-              ended = true
-              sb.append('\n').append(documentEnd)
-            }
-            // Pretty mode: strip the emitter's leading newline — the sink
-            // writes one per record. Compact rows start at '<'.
-            fillText(if (options.compactOutput) 0 else 1)
-          } else {
-            throw new NoSuchElementException("exhausted")
-          }
-          (NullWritable.get(), text)
-        }
-      }
-    }
-    val outFmt = classOf[org.apache.hadoop.mapred.TextOutputFormat[NullWritable, Text]]
-    codecClass match {
-      case Some(c) =>
-        rendered.saveAsHadoopFile(path, classOf[NullWritable], classOf[Text], outFmt, c)
-      case None =>
-        rendered.saveAsHadoopFile(path, classOf[NullWritable], classOf[Text], outFmt)
-    }
+    val sc = df.sparkSession.sparkContext
+    // Like Spark's V2 write: a frame with no partitions still runs one task,
+    // so partition 0 writes the document skeleton.
+    val planned = df.queryExecution.toRdd
+    val rows = if (planned.getNumPartitions > 0) planned else sc.parallelize(Seq.empty[InternalRow], 1)
+    val write = new v2.XmlBatchWrite(options.parameters + ("path" -> path), df.schema,
+      UUID.randomUUID().toString, truncateOnCommit = false,
+      new v2.SerializableHadoopConf(new Configuration(sc.hadoopConfiguration)))
+    try {
+      val factory = write.createBatchWriterFactory(new PhysicalWriteInfo {
+        override def numPartitions(): Int = rows.getNumPartitions
+      })
+      write.commit(sc.runJob(rows, (ctx: TaskContext, iter: Iterator[InternalRow]) => {
+        val writer = factory.createWriter(ctx.partitionId(), ctx.taskAttemptId())
+        try {
+          iter.foreach(writer.write)
+          writer.commit()
+        } catch { case t: Throwable => writer.abort(); throw t }
+        finally writer.close()
+      }))
+    } catch { case t: Throwable => write.abort(Array.empty); throw t }
   }
 
-  /** Shared with the V2 write path (same option, same short names). */
+  /** The codec class `codec` names, by short or class name (the V2 writer
+   *  and `XmlPartitioned.write`). */
   private[graft] def resolveCodec(name: String): Class[_ <: CompressionCodec] = {
     val shortNames = Map(
       "gzip" -> "org.apache.hadoop.io.compress.GzipCodec",

@@ -1,6 +1,6 @@
 package graft.xml
 
-import java.nio.charset.StandardCharsets
+import java.nio.charset.{Charset, StandardCharsets}
 import java.time.{ZoneId, ZoneOffset}
 
 import org.apache.spark.sql.catalyst.util.CaseInsensitiveMap
@@ -22,12 +22,17 @@ class XmlOptions(@transient private val raw: Map[String, String]) extends Serial
   val charset: String = get("charset").getOrElse(StandardCharsets.UTF_8.name())
   // Fail on the driver with the JDK's UnsupportedCharsetException (same
   // contract as the reference) instead of per-task on executors.
-  java.nio.charset.Charset.forName(charset)
+  Charset.forName(charset)
   val codec: Option[String] = get("codec").orElse(get("compression"))
 
   val rowTag: String = get("rowTag").getOrElse(XmlOptions.DefaultRowTag)
   val rootTag: String = get("rootTag").getOrElse(XmlOptions.DefaultRootTag)
-  val declaration: String = get("declaration").getOrElse(XmlOptions.DefaultDeclaration)
+  /** Defaults to the reference declaration (reference:
+   *  src/main/scala/com/databricks/spark/xml/XmlOptions.scala:76) with
+   *  `encoding` naming the write charset, so a UTF-8 write diffs clean
+   *  against reference output and any other charset declares itself. */
+  val declaration: String = get("declaration").getOrElse(
+    s"""version="1.0" encoding="${Charset.forName(charset).name()}" standalone="yes"""")
   val arrayElementName: String =
     get("arrayElementName").getOrElse(XmlOptions.DefaultArrayElementName)
 
@@ -77,13 +82,18 @@ class XmlOptions(@transient private val raw: Map[String, String]) extends Serial
    */
   val splitMaxBytes: Option[Long] = get("splitMaxBytes").map(_.toLong)
   /**
-   * Roll V2 sink output to a new part file every N records (extra over the
-   * reference surface; the V2 counterpart of Spark's own
-   * `spark.sql.files.maxRecordsPerFile`, which only applies to FileFormat
-   * sinks). Bounds the size of any single object at 100-TB scale — each
-   * rolled file is still a complete, independently parseable XML document.
+   * Roll batch write output (`xmlng`, `xmlng2`, stream-sink batches) to a
+   * new part file every N records (extra over the reference surface; the
+   * counterpart of Spark's own `spark.sql.files.maxRecordsPerFile`, which
+   * only applies to FileFormat sinks). Bounds the size of any single object
+   * at 100-TB scale — each rolled file is still a complete, independently
+   * parseable XML document.
    */
   val maxRecordsPerFile: Option[Long] = get("maxRecordsPerFile").map(_.toLong)
+
+  /** The options as given, without `path`, to hand to a writer with its own
+   *  destination. Driver-only: the raw map is not shipped to executors. */
+  def parameters: Map[String, String] = raw.filter { case (k, _) => !k.equalsIgnoreCase("path") }
 
   /** What opens every written document: the declaration, if any, then
    *  `<rootTag>`. */
@@ -116,10 +126,6 @@ object XmlOptions {
   val DefaultRowTag = "ROW"
   val DefaultNullValue: String = null
   val DefaultRootTag = "ROWS"
-  // Matches the reference default byte-for-byte (reference:
-  // src/main/scala/com/databricks/spark/xml/XmlOptions.scala:76) so written
-  // files diff clean against reference output.
-  val DefaultDeclaration = """version="1.0" encoding="UTF-8" standalone="yes""""
   val DefaultArrayElementName = "item"
   val DefaultCorruptRecordName = "_corrupt_record"
   val DefaultWildcardColName = "xs_any"

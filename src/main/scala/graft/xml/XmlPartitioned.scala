@@ -86,7 +86,8 @@ object XmlPartitioned {
     partitionCols.foreach { c =>
       require(df.schema.fieldNames.contains(c), s"unknown partition column '$c'")
     }
-    val opts = new XmlOptions(options)
+    // Text output is UTF-8 whatever `charset` says: declare what is written.
+    val opts = new XmlOptions(options.filter { case (k, _) => !k.equalsIgnoreCase("charset") })
     val subdir = concat_ws("/", partitionCols.map { c =>
       concat(lit(s"$c="), escapedValue(col(c)))
     }: _*)

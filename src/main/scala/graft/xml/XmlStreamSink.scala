@@ -17,11 +17,13 @@ import org.apache.spark.sql.graft.Bridge
  * Exactly-once model: every micro-batch is rendered through the batch writer
  * ([[XmlFile.save]] — so each emitted part file is a complete, independently
  * parseable XML document with declaration and rootTag) into a hidden
- * temporary directory, its part files are then moved into `dir` under
- * DETERMINISTIC names `part-<batchId>-<n>.xml[.codec]`, and finally a marker
- * is created under `dir/_xmlng_commits/<batchId>`. A replayed batch (crash
- * before the marker) overwrites the same deterministic targets instead of
- * duplicating them; a batch whose marker exists is skipped outright.
+ * temporary directory, its part files are then moved into `dir` under the
+ * batch's prefix, as `part-<batchId>-<writer's name minus "part-">`, and
+ * finally a marker is created under `dir/_xmlng_commits/<batchId>`. The
+ * writer's names carry a per-write id, so a replay does not reproduce them:
+ * a replayed batch (crash before the marker) is safe because it first
+ * deletes every file under its `part-<batchId>-` prefix, whatever attempt
+ * wrote it; a batch whose marker exists is skipped outright.
  * Underscore-prefixed working dirs are invisible to Hadoop input listings,
  * so a plain batch read of `dir` sees only data files.
  *
@@ -65,12 +67,12 @@ private[xml] class XmlStreamSink(
     if (fs.exists(tmp)) fs.delete(tmp, true)
     XmlFile.save(batchDf, tmp.toString, options)
 
-    // A replay may render FEWER part files than the crashed attempt (e.g.
-    // restart on fewer cores changes split packing); deterministic names
-    // would overwrite the shared prefix but leave the tail stale, silently
-    // duplicating rows. Clear every part of this batch first — via a
-    // prefix glob, which object stores serve as one prefix-bounded LIST,
-    // not a scan of the whole (ever-growing) output directory.
+    // A replay names its parts afresh and may render fewer of them (e.g.
+    // restart on fewer cores changes split packing); whatever the crashed
+    // attempt moved here would duplicate rows. Clear every part of this
+    // batch first — via a prefix glob, which object stores serve as one
+    // prefix-bounded LIST, not a scan of the whole (ever-growing) output
+    // directory.
     Option(fs.globStatus(new Path(dir, s"part-$batchId-*")))
       .getOrElse(Array.empty).foreach(st => fs.delete(st.getPath, false))
 
@@ -78,13 +80,10 @@ private[xml] class XmlStreamSink(
       st.isFile && st.getPath.getName.startsWith("part-")
     }
     parts.foreach { st =>
-      // part-00000[.gz] → part-<batchId>-00000[.gz]: deterministic so a
-      // replay overwrites rather than duplicates.
-      val suffix = st.getPath.getName.stripPrefix("part-")
+      // part-00000-c000-<id>.xml[.gz] → part-<batchId>-00000-c000-<id>.xml[.gz].
       // No exists/delete probe per target: the batch-prefix sweep above
-      // already cleared every possible name for this batch.
-      val target = new Path(dir, s"part-$batchId-$suffix" +
-        (if (suffix.contains(".")) "" else ".xml"))
+      // already cleared this batch's names.
+      val target = new Path(dir, s"part-$batchId-${st.getPath.getName.stripPrefix("part-")}")
       if (!fs.rename(st.getPath, target)) {
         throw new IllegalStateException(
           s"xmlng sink: failed to move ${st.getPath} to $target")

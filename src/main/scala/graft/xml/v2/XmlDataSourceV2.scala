@@ -264,7 +264,7 @@ private[v2] final class XmlPartitionReader(
  * `Configuration` itself is `Writable` but not `java.io.Serializable`, and
  * Spark's own wrapper is `private[spark]`).
  */
-private[v2] final class SerializableHadoopConf(@transient var value: Configuration)
+private[xml] final class SerializableHadoopConf(@transient var value: Configuration)
   extends Serializable {
 
   private def writeObject(out: java.io.ObjectOutputStream): Unit = {

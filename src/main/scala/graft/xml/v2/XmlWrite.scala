@@ -15,17 +15,18 @@ import org.apache.spark.sql.types.StructType
 import graft.xml.{StaxXmlGenerator, XmlEmitter, XmlFile, XmlOptions}
 
 /**
- * DataSource V2 batch write for the XML sink (`df.write.format("xmlng2")`),
- * the executor-side-commit companion of the DSv1 `XmlFile.save` path. Same
- * document layout — each part file is a complete, independently parseable
- * XML document (declaration, `<rootTag>`, one `<rowTag>` element per row,
- * `</rootTag>`) — but the commit protocol is the V2 one:
+ * The one batch XML file writer. It runs under Spark's V2 write for
+ * `df.write.format("xmlng2")`, and [[XmlFile.save]] drives it directly for
+ * `xmlng` saves, `INSERT OVERWRITE` and stream-sink batches. Each part file
+ * is a complete, independently parseable XML document (declaration,
+ * `<rootTag>`, one `<rowTag>` element per row, `</rootTag>`) in the
+ * configured `charset`. The commit protocol:
  *
  *  - every task writes to a uniquely-named file under a hidden staging
  *    directory inside the destination (`.xmlng2-staging-<queryId>`; both
  *    Hadoop's input listing and the xmlng stream source skip dot-names);
- *  - Spark's output-commit coordinator (`useCommitCoordinator`, default on)
- *    guarantees exactly one committed attempt per partition, so speculative
+ *  - a task's commit publishes nothing: it returns the names of its staged
+ *    files, and the driver keeps one result per partition, so speculative
  *    or retried attempts never double-publish;
  *  - job `commit()` renames the committed files into place — a per-file
  *    metadata operation, no data movement, no driver-side data — then
@@ -34,11 +35,15 @@ import graft.xml.{StaxXmlGenerator, XmlEmitter, XmlFile, XmlOptions}
  *    task output becomes durable where it will be read, and the driver's
  *    commit cost is O(files), not O(bytes).
  *
- * Overwrite (`SupportsOverwrite`/`SupportsTruncate`) deletes the previous
- * contents at JOB COMMIT time, after every task output is durably staged —
- * a failure anywhere before commit leaves the old data fully intact (the
- * DSv1 `InsertableRelation` path, like Hadoop's committer, deletes up
- * front). Filter-based overwrite accepts only the always-true predicate
+ * Empty partitions produce no file, except partition 0, which always
+ * writes the document skeleton so an empty DataFrame still round-trips as
+ * a readable zero-record corpus.
+ *
+ * Overwrite through `xmlng2` (`SupportsOverwrite`/`SupportsTruncate`)
+ * deletes the previous contents at JOB COMMIT time, after every task
+ * output is durably staged — a failure anywhere before commit leaves the
+ * old data fully intact (an `xmlng` overwrite deletes up front, in its
+ * caller). Filter-based overwrite accepts only the always-true predicate
  * (≡ truncate): an unpartitioned XML directory has no metadata to prune
  * files by, so a selective overwrite would have to read-and-rewrite — a
  * different operator, rejected loudly at plan time rather than silently
@@ -48,12 +53,6 @@ import graft.xml.{StaxXmlGenerator, XmlEmitter, XmlFile, XmlOptions}
  * every N records; every rolled file is a complete XML document. At 100 TB
  * this bounds the largest single object a downstream reader must handle —
  * without it one skewed partition can produce an arbitrarily large file.
- *
- * Differences from DSv1 save, both deliberate: the configured `charset`
- * is honored on output (DSv1 funnels through Hadoop `Text`, which is
- * UTF-8-only), and empty partitions produce no file at all — except
- * partition 0, which always writes the document skeleton so an empty
- * DataFrame still round-trips as a readable zero-record corpus.
  */
 private[v2] final class XmlWriteBuilder(
     parameters: Map[String, String],
@@ -79,17 +78,11 @@ private[v2] final class XmlWriteBuilder(
     this
   }
 
-  override def build(): Write = {
-    // Fail-fast on the driver at plan time: a bad charset or codec name
-    // should never surface as N identical task failures deep in the job.
-    val options = XmlOptions(parameters)
-    java.nio.charset.Charset.forName(options.charset)
-    options.codec.foreach(XmlFile.resolveCodec)
+  override def build(): Write =
     new XmlBatchWrite(parameters, schema, queryId, truncateOnCommit, hadoopConf)
-  }
 }
 
-private[v2] final class XmlBatchWrite(
+private[xml] final class XmlBatchWrite(
     parameters: Map[String, String],
     schema: StructType,
     queryId: String,
@@ -98,6 +91,9 @@ private[v2] final class XmlBatchWrite(
 
   private val destPath = XmlTable.pathFor(parameters)
   private val stagingName = s".xmlng2-staging-$queryId"
+  // Fail fast on the driver: a bad charset (XmlOptions checks it) or codec
+  // name should never surface as N identical task failures deep in the job.
+  XmlOptions(parameters).codec.foreach(XmlFile.resolveCodec)
 
   override def toBatch: BatchWrite = this
 
@@ -141,7 +137,7 @@ private[v2] final class XmlBatchWrite(
                 val to = new Path(dest, finalName)
                 if (!fs.rename(from, to)) {
                   throw new IllegalStateException(
-                    s"xmlng2 write: failed to publish $from -> $to")
+                    s"xml write: failed to publish $from -> $to")
                 }
               }
             })
@@ -154,7 +150,7 @@ private[v2] final class XmlBatchWrite(
       // the staging dir; on a commit exception Spark calls abort(), for
       // which this delete is also the entire cleanup.
       if (!fs.delete(staging, true) && fs.exists(staging)) {
-        logWarning(s"xmlng2 write: could not remove staging dir $staging")
+        logWarning(s"xml write: could not remove staging dir $staging")
       }
     }
   }
@@ -248,7 +244,7 @@ private[v2] final class XmlDataWriter(
     val emitter = new XmlEmitter(sb, baseDepth = 1, compact = options.compactOutput)
     gen.write(emitter, row)
     // pretty mode emits its own leading newline; compact rows need one to
-    // land one-per-line, matching the DSv1 text layout byte for byte
+    // land one per line
     if (options.compactOutput) out.write("\n")
     out.write(sb.toString)
     recordsInFile += 1

@@ -133,4 +133,25 @@ class XmlCharsetSuite extends AnyFunSuite {
     assert(got.length === 50)
     assert(got.forall { case (i, t) => t == s"café $i" })
   }
+
+  test("xmlng writes in the charset it is given and declares it") {
+    import spark.implicits._
+    for ((charset, text) <- Seq("ISO-8859-1" -> "café", "UTF-16" -> "日本")) {
+      val out = tmp.resolve(s"written-$charset").toString
+      Seq((1L, text), (2L, s"$text 2"), (3L, s"$text 3")).toDF("id", "txt").repartition(2)
+        .write.format("xmlng").mode("overwrite")
+        .option("rowTag", "doc").option("rootTag", "docs").option("charset", charset)
+        .save(out)
+      val back = read(out, charset).collect().map(r => (r.getLong(0), r.getString(1)))
+      assert(back.sortBy(_._1).toSeq === Seq((1L, text), (2L, s"$text 2"), (3L, s"$text 3")),
+        charset)
+      val parts = new java.io.File(out).listFiles.filter(_.getName.startsWith("part-"))
+      assert(parts.nonEmpty, charset)
+      parts.foreach { f =>
+        val doc = new String(Files.readAllBytes(f.toPath), charset)
+        assert(doc.startsWith(s"""<?xml version="1.0" encoding="$charset" standalone="yes"?>"""),
+          s"$charset: ${doc.take(60)}")
+      }
+    }
+  }
 }

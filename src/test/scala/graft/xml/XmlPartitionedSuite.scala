@@ -34,6 +34,16 @@ class XmlPartitionedSuite extends AnyFunSuite {
       (3L, "gamma", "s2"), (4L, "delta", "s3")))
   }
 
+  test("partitioned write declares the UTF-8 it writes, whatever charset says") {
+    val dir = tmp()
+    val df = Seq((1L, "café", "s1")).toDF("id", "body", "src")
+    XmlPartitioned.write(df, dir, Seq("src"), Map("rowTag" -> "doc", "charset" -> "ISO-8859-1"))
+    val part = new java.io.File(dir, "src=s1").listFiles().filter(_.getName.startsWith("part")).head
+    val doc = new String(java.nio.file.Files.readAllBytes(part.toPath), "UTF-8")
+    assert(doc.startsWith("""<?xml version="1.0" encoding="UTF-8" standalone="yes"?>"""), doc)
+    assert(doc.contains("café"))
+  }
+
   test("filters on partition columns prune branches from the plan") {
     val dir = tmp()
     val df = (0L until 40L).map(i => (i, s"t$i", s"p${i % 4}")).toDF("id", "t", "src")

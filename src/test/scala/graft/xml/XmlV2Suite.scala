@@ -2,7 +2,7 @@ package graft.xml
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.functions.{col, sum}
@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The DSv2 `xmlng2` read path: row identity with DSv1, pruning/pushdown
- *  through the connector API, reported statistics driving auto-broadcast. */
+ *  through the connector API, reported statistics driving auto-broadcast;
+ *  and the batch writer that `xmlng2` and `xmlng` saves both run. */
 class XmlV2Suite extends AnyFunSuite {
 
   private lazy val spark = SparkTestSession.spark
@@ -144,13 +145,20 @@ class XmlV2Suite extends AnyFunSuite {
   private def freshDir(): String =
     Files.createTempDirectory("graft_v2w").resolve("out").toString
 
-  private def writeV2(df: DataFrame, out: String, mode: String,
+  private def save(format: String, df: DataFrame, out: String, mode: String,
       extra: (String, String)*): Unit = {
-    var w = df.write.format("xmlng2")
+    var w = df.write.format(format)
       .option("rowTag", "r").option("rootTag", "rows").mode(mode)
     extra.foreach { case (k, v) => w = w.option(k, v) }
     w.save(out)
   }
+
+  private def writeV2(df: DataFrame, out: String, mode: String,
+      extra: (String, String)*): Unit = save("xmlng2", df, out, mode, extra: _*)
+
+  /** Both ways into the batch writer: Spark's V2 write (`xmlng2`, append)
+   *  and `XmlFile.save` (`xmlng`, overwrite). */
+  private val routes = Seq("xmlng2" -> "append", "xmlng" -> "overwrite")
 
   private def readBack(out: String): DataFrame =
     spark.read.format("xmlng").option("rowTag", "r").schema(schema).load(out)
@@ -178,73 +186,89 @@ class XmlV2Suite extends AnyFunSuite {
   }
 
   test("v2 write: empty dataset still publishes a readable skeleton") {
-    val out = freshDir()
-    // several empty tasks: only partition 0 writes the document skeleton
-    writeV2(v1.limit(0).repartition(3), out, "append")
-    val parts = new java.io.File(out).listFiles
-      .map(_.getName).filter(_.startsWith("part-"))
-    assert(parts.length === 1, s"expected one skeleton file, got ${parts.toSeq}")
-    assert(readBack(out).count() === 0)
+    // several empty tasks, or none at all: only partition 0 writes the
+    // document skeleton
+    val noPartitions = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    for ((format, mode) <- routes; empty <- Seq(v1.limit(0).repartition(3), noPartitions)) {
+      val out = freshDir()
+      save(format, empty, out, mode)
+      val parts = new java.io.File(out).listFiles
+        .map(_.getName).filter(_.startsWith("part-"))
+      assert(parts.length === 1, s"$format: expected one skeleton file, got ${parts.toSeq}")
+      assert(readBack(out).count() === 0)
+    }
   }
 
   test("v2 write: task failure aborts cleanly, old data stays intact") {
-    val out = freshDir()
-    writeV2(v1.limit(10), out, "append")
-    val before = readBack(out).collect().map(_.toSeq).sortBy(_.toString).toSeq
     val bomb = org.apache.spark.sql.functions.udf { (id: Long) =>
       if (id == 500L) throw new RuntimeException("boom"); id
     }
     val failing = v1.withColumn("_id", bomb(col("_id")))
-    intercept[Exception] { writeV2(failing, out, "overwrite") }
-    // overwrite truncates only at commit, which never ran: data unchanged
-    assert(readBack(out).collect().map(_.toSeq).sortBy(_.toString).toSeq === before)
-    val leftover = new java.io.File(out).listFiles.map(_.getName)
-    assert(!leftover.exists(_.contains("staging")),
-      s"staging dir survived abort: ${leftover.toSeq}")
+    for ((format, _) <- routes) {
+      val out = freshDir()
+      writeV2(v1.limit(10), out, "append")
+      val before = readBack(out).collect().map(_.toSeq).sortBy(_.toString).toSeq
+      intercept[Exception] { save(format, failing, out, "overwrite") }
+      // xmlng2 truncates only at commit, which never ran: data unchanged
+      // (an xmlng overwrite deletes the target before its job starts)
+      if (format == "xmlng2") {
+        assert(readBack(out).collect().map(_.toSeq).sortBy(_.toString).toSeq === before)
+      }
+      val leftover = new java.io.File(out).listFiles.map(_.getName)
+      assert(!leftover.exists(_.contains("staging")),
+        s"$format: staging dir survived abort: ${leftover.toSeq}")
+    }
   }
 
   test("v2 write: gzip codec compresses parts that read back identically") {
-    val out = freshDir()
-    writeV2(v1.limit(50), out, "append", "codec" -> "gzip")
-    val parts = new java.io.File(out).listFiles.map(_.getName)
-      .filter(_.startsWith("part-"))
-    assert(parts.nonEmpty && parts.forall(_.endsWith(".xml.gz")), s"${parts.toSeq}")
-    assert(readBack(out).count() === 50)
+    for ((format, mode) <- routes) {
+      val out = freshDir()
+      save(format, v1.limit(50), out, mode, "codec" -> "gzip")
+      val parts = new java.io.File(out).listFiles.map(_.getName)
+        .filter(_.startsWith("part-"))
+      assert(parts.nonEmpty && parts.forall(_.endsWith(".xml.gz")), s"$format: ${parts.toSeq}")
+      assert(readBack(out).count() === 50)
+    }
   }
 
   test("v2 write: 64 partitions publish 64 parts, every row exactly once") {
-    val out = freshDir()
-    writeV2(v1.repartition(64), out, "append")
-    val parts = new java.io.File(out).listFiles.map(_.getName)
-      .filter(_.startsWith("part-")).sorted
-    assert(parts.length === 64, s"${parts.length} parts")
-    // names carry the zero-padded partition id: stable, collision-free
-    assert(parts.head.startsWith("part-00000-") && parts.last.startsWith("part-00063-"))
-    val ids = readBack(out).select("_id").collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq === (0L until 1000L))
+    for ((format, mode) <- routes) {
+      val out = freshDir()
+      save(format, v1.repartition(64), out, mode)
+      val parts = new java.io.File(out).listFiles.map(_.getName)
+        .filter(_.startsWith("part-")).sorted
+      assert(parts.length === 64, s"$format: ${parts.length} parts")
+      // names carry the zero-padded partition id: stable, collision-free
+      assert(parts.head.startsWith("part-00000-") && parts.last.startsWith("part-00063-"),
+        s"$format: ${parts.head} .. ${parts.last}")
+      val ids = readBack(out).select("_id").collect().map(_.getLong(0)).sorted
+      assert(ids.toSeq === (0L until 1000L))
+    }
   }
 
   test("v2 write: maxRecordsPerFile rolls complete documents, no row lost") {
-    val out = freshDir()
-    // 1000 rows over 4 tasks, 100-record roll: 250 per task → 3 files each
-    writeV2(v1.repartition(4), out, "append", "maxRecordsPerFile" -> "100")
-    val parts = new java.io.File(out).listFiles.map(_.getName)
-      .filter(_.startsWith("part-")).sorted
-    assert(parts.length === 12, s"expected 12 rolled files, got ${parts.toSeq}")
-    // per-partition file seq is part of the name: part-PPPPP-cSSS-...
-    assert(parts.count(_.startsWith("part-00000-c")) === 3)
-    // every rolled file is a complete, independently parseable document
-    val one = spark.read.format("xmlng").option("rowTag", "r")
-      .schema(schema).load(new java.io.File(out, parts.head).toString)
-    assert(one.count() === 100)
-    val ids = readBack(out).select("_id").collect().map(_.getLong(0)).sorted
-    assert(ids.toSeq === (0L until 1000L))
-    // rolling composes with overwrite-at-commit
-    writeV2(v1.limit(10), out, "overwrite", "maxRecordsPerFile" -> "3")
-    assert(readBack(out).count() === 10)
-    val after = new java.io.File(out).listFiles.map(_.getName)
-      .filter(_.startsWith("part-"))
-    assert(after.length === 4, s"ceil(10/3) = 4 files, got ${after.toSeq}")
+    for ((format, mode) <- routes) {
+      val out = freshDir()
+      // 1000 rows over 4 tasks, 100-record roll: 250 per task → 3 files each
+      save(format, v1.repartition(4), out, mode, "maxRecordsPerFile" -> "100")
+      val parts = new java.io.File(out).listFiles.map(_.getName)
+        .filter(_.startsWith("part-")).sorted
+      assert(parts.length === 12, s"$format: expected 12 rolled files, got ${parts.toSeq}")
+      // per-partition file seq is part of the name: part-PPPPP-cSSS-...
+      assert(parts.count(_.startsWith("part-00000-c")) === 3)
+      // every rolled file is a complete, independently parseable document
+      val one = spark.read.format("xmlng").option("rowTag", "r")
+        .schema(schema).load(new java.io.File(out, parts.head).toString)
+      assert(one.count() === 100)
+      val ids = readBack(out).select("_id").collect().map(_.getLong(0)).sorted
+      assert(ids.toSeq === (0L until 1000L))
+      // rolling composes with overwrite
+      save(format, v1.limit(10), out, "overwrite", "maxRecordsPerFile" -> "3")
+      assert(readBack(out).count() === 10)
+      val after = new java.io.File(out).listFiles.map(_.getName)
+        .filter(_.startsWith("part-"))
+      assert(after.length === 4, s"$format: ceil(10/3) = 4 files, got ${after.toSeq}")
+    }
   }
 
   test("v2 write: bad charset/codec fail on the driver at plan time") {
